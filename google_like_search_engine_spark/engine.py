@@ -322,16 +322,20 @@ class SearchEngine:
 
     def _invalidate_blocked_cache(self, index_path: str | None = None) -> None:
         """Drop cached blocked-index handles (one path, or all when
-        ``index_path`` is None), unpersisting their doc_stats dimension."""
+        ``index_path`` is None), unpersisting their doc_stats dimension,
+        plus the url dicts and shard masks built from them."""
         cache = getattr(self, "_blocked_cache", None)
         if not cache:
             return
         keys = [index_path] if index_path is not None else list(cache)
+        masks = getattr(self, "_blocked_masks", {})
         for key in keys:
             entry = cache.pop(key, None)
             if entry is not None:
                 entry[1].unpersist()
             getattr(self, "_blocked_url_dicts", {}).pop(key, None)
+            for paths in [m for m in list(masks) if key in m]:
+                del masks[paths]
 
     def _blocked_handles(self, index_path: str):
         """Per-path blocked-index handles, opened once: the blocks scan
@@ -495,58 +499,218 @@ class SearchEngine:
                 dicts[index_path] = None
         return dicts[index_path]
 
+    def _shard_masks(self, paths: tuple):
+        """Per-shard (masked urls, over-fetch count) of a federated
+        deployment, built once per ``paths`` tuple from the later
+        shards' driver-side forward indexes (see _federated) and
+        dropped with them by _invalidate_blocked_cache."""
+        memo = getattr(self, "_blocked_masks", None)
+        if memo is None:
+            memo = self._blocked_masks = {}
+        if paths not in memo:
+            owned = [self._blocked_url_dict(p) for p in paths]
+            masked, later = [], set()
+            for urls in reversed(owned):
+                masked.append(later)
+                if urls is not None:
+                    later = later.union(urls.values())
+            masked.reverse()
+            extra = [
+                len(m.intersection(urls.values())) if urls is not None else 0
+                for m, urls in zip(masked, owned)
+            ]
+            memo[paths] = (masked, extra)
+        return memo[paths]
+
+    def _federated(
+        self,
+        index_path: str | list,
+        run,
+        k: int | None = None,
+        value_col: str | None = "score",
+        value_type: str = "double",
+        stat_terms: list | None = None,
+    ) -> DataFrame:
+        """One blocked query over one index or a federated deployment.
+
+        ``index_path`` is a save_blocked dir or a list of them:
+        independently built shards, the serving shape a 100 TB corpus
+        deploys (shards are built, merged and replaced independently;
+        queries scatter-gather). ``run(path, k, stats)`` plans the
+        query on one shard and returns its DataFrame, or None when the
+        shard's answer is provably empty.
+
+        One path is the plain blocked query: ``run`` gets the caller's
+        k and ``stats=None`` (the index's own sidecar stats, with every
+        pre-sidecar fallback) and its DataFrame is returned as is — no
+        pool, no mask, no extra job.
+
+        Several paths:
+
+        - Global stats. The scored kinds (bm25, threshold, ranked
+          boolean) name ``stat_terms``: BM25's idf and length
+          normalisation need corpus-wide N / avgdl / df, or shard
+          scores aren't comparable. They are recombined once from the
+          shards' meta + term_stats sidecars (driver-side, zero jobs;
+          N = sum of totals, avgdl = doc-weighted mean, df = per-term
+          sum; a missing sidecar raises ValueError) and passed to every
+          shard as ``stats = (N, avgdl, {term: df})``. Each shard keeps
+          its own max_tf / min_dl, which only need to bound that
+          shard's block-max pruning. Phrase, proximity and unranked
+          boolean are shard-local and need no stats.
+        - Overlap. Later-listed shards take precedence per url
+          (merge_pages / merge_blocked_shards semantics): a url owned
+          by a later shard MASKS every earlier shard's row for it, even
+          when the newer version doesn't match the query. Masking runs
+          after each shard's top-k, so shard i over-fetches
+          k + |masked_i ∩ own urls_i| rows; at most that many are
+          masked, so >= k live rows survive whenever the shard has
+          them. The mask sets come from the shards' driver-side forward
+          indexes and are memoised per deployment (_shard_masks). A
+          shard beyond URL_DICT_CAP can't mask; there precedence
+          degrades to keep-latest-on-collision.
+        - Fan-out and merge. Shards run concurrently in one pool (Spark
+          schedules jobs from many threads, so latency is the slowest
+          shard, not the sum); each shard's jobs keep the caller's job
+          group and tags. Rows merge driver-side: (value desc, url),
+          the single-index tie-break; bare urls (unranked boolean) by
+          url; ``k=None`` (threshold) keeps every row.
+
+        Disjoint shards return the single index over the union corpus
+        row for row (pinned by tests). Overlapping base+delta shards
+        return the compacted index's urls with no stale or duplicate
+        rows; the scored kinds' stats still count superseded copies
+        until merge_blocked_shards compacts them — the bounded drift
+        Lucene's deleted docs cause until a segment merge."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.util import inheritable_thread_target
+
+        from .wand import _local_result_df
+
+        def result(rows):
+            if value_col is None or (rows and len(rows[0]) == 1):  # bare urls
+                return _local_result_df(
+                    self.spark, [(r[0], 1) for r in rows], "_one", "long"
+                ).select("url")
+            return _local_result_df(self.spark, rows, value_col, value_type)
+
+        paths = [index_path] if isinstance(index_path, str) else list(index_path)
+        if len(paths) == 1:
+            out = run(paths[0], k, None)
+            return result([]) if out is None else out
+
+        stats = None
+        if stat_terms is not None:
+            shards = []
+            for p in paths:
+                _b, _d, total, agg, ts = self._blocked_handles(p)
+                if agg is None or ts is None:
+                    raise ValueError(
+                        f"sharded search needs meta + term_stats sidecars: {p}"
+                    )
+                shards.append((total, agg[0], ts))
+            n = sum(s[0] for s in shards)
+            if n == 0:
+                return result([])
+            df: dict = {}
+            for _t, _a, ts in shards:
+                for w in stat_terms:
+                    if w in ts:
+                        df[w] = df.get(w, 0) + ts[w][0]
+            stats = (n, sum(t * a for t, a, _ts in shards) / n, df)
+        masked, extra = self._shard_masks(tuple(paths))
+
+        def scatter(i):
+            out = run(paths[i], None if k is None else k + extra[i], stats)
+            if out is None:
+                return []
+            return [tuple(r) for r in out.collect() if r[0] not in masked[i]]
+
+        per_url: dict = {}
+        with ThreadPoolExecutor(max_workers=min(8, len(paths))) as ex:
+            # shard order: a later shard's row wins a url collision
+            for rows in ex.map(
+                inheritable_thread_target(self.spark)(scatter), range(len(paths))
+            ):
+                per_url.update((r[0], r) for r in rows)
+        rows = sorted(
+            per_url.values(), key=lambda r: (-r[1], r[0]) if len(r) > 1 else r
+        )
+        return result(rows if k is None else rows[:k])
+
     def search_bm25_blocked(
         self,
-        index_path: str,
+        index_path: str | list,
         query: str,
         k: int = 10,
         required: list | None = None,
         excluded: list | None = None,
     ) -> DataFrame:
-        """BM25 top-k straight off the on-disk blocked index: the term
-        filter prunes term_bucket partitions before any decode.
-        ``required``/``excluded``: `+term -term` boolean filters with
-        the served path's semantics (wand.blocked_maxscore_topk)."""
+        """BM25 top-k straight off the on-disk blocked index, or a list
+        of shard dirs (_federated): the term filter prunes term_bucket
+        partitions before any decode. ``required``/``excluded``:
+        `+term -term` boolean filters with the served path's semantics
+        (wand.blocked_maxscore_topk); doc membership is shard-local, so
+        they apply per shard exactly."""
         words = sorted({w.lower() for w in expand_query(query)})
         req = [w.lower() for w in (required or [])]
         exc = [w.lower() for w in (excluded or [])]
         # bucket pruning must keep the FILTER terms' buckets too
-        blocks, doc_stats_idx, total, stats, term_stats = self._pruned_blocked_scan(
-            index_path, sorted(set(words + req + exc)), compute_fallback=True
-        )
-        if blocks is None:
-            return self.spark.createDataFrame([], "url string, score double")
-        return blocked_maxscore_topk(
-            self.spark, query, blocks.drop("term_bucket"), doc_stats_idx, total,
-            k=k, doc_stats_agg=stats, term_stats=term_stats,
-            url_lookup=self._blocked_url_dict(index_path),
-            required=req, excluded=exc,
-        )
+        prune = sorted(set(words + req + exc))
+
+        def run(path, top, stats):
+            blocks, dsi, total, agg, ts = self._pruned_blocked_scan(
+                path, prune, compute_fallback=True
+            )
+            if blocks is None:
+                return None
+            if stats is not None:  # global df over this shard's max_tf/bucket
+                total, avgdl, df = stats
+                agg = (avgdl, agg[1])
+                ts = {w: (d, *ts[w][1:]) for w, d in df.items() if w in ts}
+            return blocked_maxscore_topk(
+                self.spark, query, blocks.drop("term_bucket"), dsi, total,
+                k=top, doc_stats_agg=agg, term_stats=ts,
+                url_lookup=self._blocked_url_dict(path),
+                required=req, excluded=exc,
+            )
+
+        return self._federated(index_path, run, k, stat_terms=words)
 
     def search_bm25_threshold_blocked(
-        self, index_path: str, query: str, threshold: float
+        self, index_path: str | list, query: str, threshold: float
     ) -> DataFrame:
         """Every document scoring >= ``threshold`` (rounded BM25),
         through the MaxScore/block-max pruned plan over the on-disk
-        blocked index — the alerting/filtering form of search (return
-        all sufficiently-relevant docs, not a fixed k), with the same
-        term-bucket partition pruning as the top-k path."""
+        blocked index or shard list (_federated) — the alerting/filtering
+        form of search (return all sufficiently-relevant docs, not a
+        fixed k), with the same term-bucket partition pruning as the
+        top-k path."""
         from .wand import blocked_maxscore_threshold
 
         words = sorted({w.lower() for w in expand_query(query)})
-        blocks, doc_stats_idx, total, stats, _ts = self._pruned_blocked_scan(
-            index_path, words, compute_fallback=True
-        )
-        if blocks is None:
-            return self.spark.createDataFrame([], "url string, score double")
-        return blocked_maxscore_threshold(
-            self.spark, query, blocks.drop("term_bucket"), doc_stats_idx,
-            total, threshold=threshold, doc_stats_agg=stats,
-        )
+
+        def run(path, _top, stats):
+            blocks, dsi, total, agg, _ts = self._pruned_blocked_scan(
+                path, words, compute_fallback=True
+            )
+            if blocks is None:
+                return None
+            df = None
+            if stats is not None:
+                total, avgdl, df = stats
+                agg = (avgdl, agg[1])
+            return blocked_maxscore_threshold(
+                self.spark, query, blocks.drop("term_bucket"), dsi, total,
+                threshold=threshold, doc_stats_agg=agg, df_override=df,
+            )
+
+        return self._federated(index_path, run, stat_terms=words)
 
     def search_hybrid_rrf(
         self,
-        index_path: str,
+        index_path: str | list,
         query: str,
         emb: DataFrame,
         query_vec,
@@ -569,19 +733,15 @@ class SearchEngine:
         returning a VALUES LocalTableScan (zero extra jobs). The
         fusion cost is O(pool), independent of corpus size.
 
-        ``index_path`` may be a LIST of blocked shard dirs: the lexical
-        retriever then federates through search_bm25_sharded (global
-        stats recombined, concurrent shard fan-out) and fusion is
-        unchanged — hybrid search over a sharded deployment."""
+        ``index_path`` may be a list of blocked shard dirs: the lexical
+        retriever then federates like every blocked query (_federated)
+        and fusion is unchanged — hybrid search over a sharded
+        deployment."""
         from concurrent.futures import ThreadPoolExecutor
 
         from .analytics.simsearch import cosine_topk
 
         def _lexical():
-            if isinstance(index_path, (list, tuple)):
-                return self.search_bm25_sharded(
-                    list(index_path), query, k=pool
-                ).collect()
             return self.search_bm25_blocked(index_path, query, k=pool).collect()
 
         def _vector():
@@ -593,13 +753,15 @@ class SearchEngine:
         # concurrently (guide §2.6) so request latency is the slower
         # retriever, not the sum; same pattern as the shard fan-out.
         # inheritable_thread_target propagates the caller thread's JVM
-        # local properties (job group / description), so UI labels and
-        # statusTracker job-count pins keep working across the pool.
+        # local properties (job group / description) and session tags,
+        # so UI labels and statusTracker job-count pins keep working
+        # across the pool.
         from pyspark.util import inheritable_thread_target
 
+        inherit = inheritable_thread_target(self.spark)
         with ThreadPoolExecutor(max_workers=2) as ex:
-            bm_f = ex.submit(inheritable_thread_target(_lexical))
-            cs_f = ex.submit(inheritable_thread_target(_vector))
+            bm_f = ex.submit(inherit(_lexical))
+            cs_f = ex.submit(inherit(_vector))
             bm_rows, cs_rows = bm_f.result(), cs_f.result()
         ranks: dict = {}
         for i, r in enumerate(bm_rows):
@@ -631,138 +793,6 @@ class SearchEngine:
             f" FROM (VALUES {vals}) AS t(url, bm25_rnk, cos_rnk, rrf)"
         )
 
-    def search_bm25_sharded(
-        self,
-        index_paths: list,
-        query: str,
-        k: int = 10,
-        required: list | None = None,
-        excluded: list | None = None,
-    ) -> DataFrame:
-        """Federated BM25 top-k over MULTIPLE independently built
-        blocked indexes — the serving shape a 100 TB corpus actually
-        deploys (no single build job owns the whole corpus; shards are
-        built, merged and replaced independently, and queries
-        scatter-gather).
-
-        Correctness hinges on GLOBAL collection statistics: BM25's
-        idf and length normalization must use corpus-wide df / N /
-        avgdl or shard scores aren't comparable. Both are recovered
-        from the shards' meta + term_stats sidecars (driver-side
-        pyarrow, zero Spark jobs): N = sum of shard totals, avgdl =
-        doc-weighted mean, df = per-term sum. Each shard then runs the
-        normal MaxScore/block-max pruned plan with the global stats
-        injected (per-shard max_tf keeps its block-max bounds valid —
-        they only need to bound that shard's scores), and the k
-        winners per shard merge driver-side by (score desc, url) —
-        the same tie-break as the single-index path, so the result is
-        row-identical to querying one index over the union corpus
-        (pinned by test). Per-query cost: one pruned scoring job per
-        shard (submitted CONCURRENTLY — Spark schedules jobs from
-        multiple threads, so fan-out latency is the slowest shard, not
-        the sum) + a k*shards driver merge.
-
-        ``required``/``excluded``: the blocked path's `+term -term`
-        filters. Doc membership is shard-local, so applying them
-        per-shard is exact; a required term absent from a shard's
-        dictionary empties that shard's contribution, which is exactly
-        the single-index semantics restricted to the shard.
-
-        Overlapping shards (a base + an uncompacted delta rewriting
-        some urls): later listed shards take precedence per url —
-        merge_pages/merge_blocked_shards semantics. A url owned by a
-        later shard MASKS every earlier shard's version (even when the
-        newer version doesn't match the query), using the later
-        shards' driver-side forward indexes; shards beyond
-        URL_DICT_CAP can't mask cheaply, so there precedence degrades
-        to keep-latest-on-collision. Global df/avgdl still count
-        superseded copies until a compaction (merge_blocked_shards)
-        runs; that bounded stats drift is the standard segment-store
-        trade (Lucene's deleted docs inflate stats until merge) and
-        none of this affects disjoint shards."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .wand import _local_result_df
-
-        words = sorted({w.lower() for w in expand_query(query)})
-        req = [w.lower() for w in (required or [])]
-        exc = [w.lower() for w in (excluded or [])]
-        shard_meta = []
-        for p in index_paths:
-            _b, _d, total, stats, ts = self._blocked_handles(p)
-            if total is None or stats is None or ts is None:
-                raise ValueError(
-                    f"sharded search needs meta + term_stats sidecars: {p}"
-                )
-            shard_meta.append((p, total, stats, ts))
-        n_global = sum(m[1] for m in shard_meta)
-        if n_global == 0:
-            return self.spark.createDataFrame([], "url string, score double")
-        avgdl_global = (
-            sum(m[1] * m[2][0] for m in shard_meta) / n_global
-        )
-        df_global: dict = {}
-        for _p, _t, _s, ts in shard_meta:
-            for w in words:
-                if w in ts:
-                    df_global[w] = df_global.get(w, 0) + ts[w][0]
-
-        # urls owned by later shards mask earlier shards' (stale) rows.
-        # Masking happens AFTER each shard's top-k truncation, so a
-        # shard whose top-k slots are partly occupied by superseded
-        # urls must OVER-FETCH by the number of its docs that can be
-        # masked (|masked ∩ shard's own url set|) — otherwise live docs
-        # ranked k+1..k+m in that shard would never reach the merge and
-        # the federated result could miss documents the merged single
-        # index returns. At most `extra` rows of a k+extra result are
-        # masked, so >= k unmasked rows survive whenever the shard has
-        # that many matches — exact. Shards beyond URL_DICT_CAP have no
-        # driver-side url set; there precedence already degrades to
-        # keep-latest-on-collision (docstring) and k is unchanged.
-        owned = [self._blocked_url_dict(m[0]) for m in shard_meta]
-        masked = [
-            set().union(
-                *(set(d.values()) for d in owned[i + 1:] if d is not None)
-            )
-            for i in range(len(shard_meta))
-        ]
-        extra = [
-            len(masked[i] & set(owned[i].values())) if owned[i] is not None else 0
-            for i in range(len(shard_meta))
-        ]
-
-        def scatter(args):
-            si, meta = args
-            p, _total, stats, ts = meta
-            blocks, dsi, _t2, _s2, _ts2 = self._pruned_blocked_scan(
-                p, sorted(set(words + req + exc)), compute_fallback=True
-            )
-            if blocks is None:
-                return []
-            gts = {
-                w: (df_global[w], ts[w][1], ts[w][2]) for w in words if w in ts
-            }
-            if not gts:
-                return []
-            part = blocked_maxscore_topk(
-                self.spark, query, blocks.drop("term_bucket"), dsi,
-                n_global, k=k + extra[si], doc_stats_agg=(avgdl_global, stats[1]),
-                term_stats=gts, url_lookup=self._blocked_url_dict(p),
-                required=req, excluded=exc,
-            )
-            return [(r["url"], float(r["score"])) for r in part.collect()]
-
-        per_url: dict = {}
-        with ThreadPoolExecutor(max_workers=min(8, len(shard_meta))) as ex:
-            # ex.map yields in shard order: a later shard's row for the
-            # same url overwrites an earlier collision
-            for si, rows in enumerate(ex.map(scatter, enumerate(shard_meta))):
-                for url, score in rows:
-                    if url not in masked[si]:
-                        per_url[url] = score
-        merged = sorted(per_url.items(), key=lambda x: (-x[1], x[0]))
-        return _local_result_df(self.spark, merged[:k])
-
     def promote_stream_index(self, store_dir: str, out_path: str) -> None:
         """Promote a Structured-Streaming incremental index store
         (streaming/index_stream.incremental_index appends, newest per
@@ -774,8 +804,8 @@ class SearchEngine:
         url/tf/positions/dl from the micro-batch tokenize, so promotion
         is exactly the batch pipeline minus tokenize: latest-wins
         compaction, global doc renumbering, re-block, sidecars. Every
-        query path (BM25/phrase/proximity/threshold/sharded) serves the
-        result."""
+        query path (BM25/phrase/proximity/threshold/boolean, alone or as
+        one shard of a federated list) serves the result."""
         from .streaming.index_stream import compact_index
 
         postings = compact_index(self.spark, store_dir)
@@ -802,7 +832,7 @@ class SearchEngine:
         two-phase numbering, url order) and re-blocks — every step is
         the build pipeline minus tokenize. The merged index is
         byte-compatible with save_blocked output (same sidecars), so
-        every query path including search_bm25_sharded serves it."""
+        every blocked query path, single or federated, serves it."""
         from .compression import unblock_postings
 
         parts = []
@@ -834,143 +864,63 @@ class SearchEngine:
         merged.save_blocked(out_path)
         self._invalidate_blocked_cache(out_path)
 
-    def search_phrase_sharded(
-        self, index_paths: list, phrase: str, k: int = 10
+    def search_phrase_blocked(
+        self, index_path: str | list, phrase: str, k: int = 10
     ) -> DataFrame:
-        """Federated phrase search: phrase occurrence counts are purely
-        shard-local (no collection statistics at all), so federation is
-        the trivial scatter-gather — per-shard phrase top-k, merged by
-        (n_occurrences desc, url) which is the single-index tie-break.
-        Row-identical to one index over the union corpus (tested)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .wand import _local_result_df
-
-        def scatter(p):
-            part = self.search_phrase_blocked(p, phrase, k=k)
-            return [(r["url"], int(r["n_occurrences"])) for r in part.collect()]
-
-        rows: list = []
-        with ThreadPoolExecutor(max_workers=min(8, len(index_paths))) as ex:
-            for part in ex.map(scatter, index_paths):
-                rows.extend(part)
-        rows.sort(key=lambda x: (-x[1], x[0]))
-        return _local_result_df(
-            self.spark, rows[:k], value_col="n_occurrences", value_type="long"
-        )
-
-    def search_bm25_threshold_sharded(
-        self, index_paths: list, query: str, threshold: float
-    ) -> DataFrame:
-        """Federated threshold search (all docs scoring >= cutoff):
-        per-shard blocked_maxscore_threshold with GLOBAL df/N/avgdl
-        injected — same statistics recombination as
-        search_bm25_sharded — then a plain union (no k to merge; the
-        result set is exact per shard). The alerting form of federated
-        search."""
-        from .wand import blocked_maxscore_threshold
-
-        words = sorted({w.lower() for w in expand_query(query)})
-        shard_meta = []
-        for p in index_paths:
-            _b, _d, total, stats, ts = self._blocked_handles(p)
-            if total is None or stats is None or ts is None:
-                raise ValueError(
-                    f"sharded search needs meta + term_stats sidecars: {p}"
-                )
-            shard_meta.append((p, total, stats, ts))
-        n_global = sum(m[1] for m in shard_meta)
-        if n_global == 0:
-            return self.spark.createDataFrame([], "url string, score double")
-        avgdl_global = sum(m[1] * m[2][0] for m in shard_meta) / n_global
-        df_global: dict = {}
-        for _p, _t, _s, ts in shard_meta:
-            for w in words:
-                if w in ts:
-                    df_global[w] = df_global.get(w, 0) + ts[w][0]
-        out = None
-        for p, _total, stats, _ts in shard_meta:
-            blocks, dsi, _t2, _s2, _ts2 = self._pruned_blocked_scan(
-                p, words, compute_fallback=True
-            )
-            if blocks is None:
-                continue
-            part = blocked_maxscore_threshold(
-                self.spark, query, blocks.drop("term_bucket"), dsi,
-                n_global, threshold=threshold,
-                doc_stats_agg=(avgdl_global, stats[1]),
-                df_override=df_global,
-            )
-            out = part if out is None else out.unionByName(part)
-        if out is None:
-            return self.spark.createDataFrame([], "url string, score double")
-        return out
-
-    def search_phrase_blocked(self, index_path: str, phrase: str, k: int = 10) -> DataFrame:
         """Exact positional phrase query off the blocked index's varint
-        positions store (wand.blocked_phrase_topk). Term-bucket
-        partition pruning applies exactly as for BM25; with the
-        dictionary sidecar a phrase word absent from the corpus
-        short-circuits to an empty result with zero jobs."""
+        positions store (wand.blocked_phrase_topk), over one index or a
+        shard list (_federated). Term-bucket partition pruning applies
+        exactly as for BM25; with the dictionary sidecar a phrase word
+        absent from the corpus short-circuits to an empty result with
+        zero jobs."""
         from .wand import blocked_phrase_topk
 
         words = [w.lower() for w in phrase.split() if w]
-        if not words:
-            return self.spark.createDataFrame([], "url string, n_occurrences long")
-        blocks, doc_stats_idx, _t, _s, _ts = self._pruned_blocked_scan(
-            index_path, words, require_all=True
-        )
-        if blocks is None:
-            return self.spark.createDataFrame([], "url string, n_occurrences long")
-        return blocked_phrase_topk(
-            self.spark, phrase, blocks.drop("term_bucket"), doc_stats_idx, k=k,
-            url_lookup=self._blocked_url_dict(index_path),
+
+        def run(path, top, _stats):
+            if not words:
+                return None
+            blocks, dsi, _t, _s, _ts = self._pruned_blocked_scan(
+                path, words, require_all=True
+            )
+            if blocks is None:
+                return None
+            return blocked_phrase_topk(
+                self.spark, phrase, blocks.drop("term_bucket"), dsi, k=top,
+                url_lookup=self._blocked_url_dict(path),
+            )
+
+        return self._federated(
+            index_path, run, k, value_col="n_occurrences", value_type="long"
         )
 
     def search_proximity_blocked(
-        self, index_path: str, terms: list, window: int = 5, k: int = 10
+        self, index_path: str | list, terms: list, window: int = 5, k: int = 10
     ) -> DataFrame:
         """Proximity query (all ``terms`` within ``window`` tokens of
         each anchor occurrence of ``terms[0]``) off the blocked index's
-        positions store, with the same term-bucket partition pruning and
-        dictionary short-circuit as the phrase path."""
+        positions store or a shard list (_federated), with the same
+        term-bucket partition pruning and dictionary short-circuit as
+        the phrase path."""
         from .wand import blocked_proximity_topk
 
         words = [w.lower() for w in terms if w]
-        if not words:
-            return self.spark.createDataFrame([], "url string, n_matches long")
-        blocks, doc_stats_idx, _t, _s, _ts = self._pruned_blocked_scan(
-            index_path, words, require_all=True
-        )
-        if blocks is None:
-            return self.spark.createDataFrame([], "url string, n_matches long")
-        return blocked_proximity_topk(
-            self.spark, words, window, blocks.drop("term_bucket"), doc_stats_idx,
-            k=k, url_lookup=self._blocked_url_dict(index_path),
-        )
 
-    def search_proximity_sharded(
-        self, index_paths: list, terms: list, window: int = 5, k: int = 10
-    ) -> DataFrame:
-        """Federated proximity search — like search_phrase_sharded,
-        match counts are shard-local so federation is plain
-        scatter-gather with the single-index (n_matches desc, url)
-        tie-break."""
-        from concurrent.futures import ThreadPoolExecutor
+        def run(path, top, _stats):
+            if not words:
+                return None
+            blocks, dsi, _t, _s, _ts = self._pruned_blocked_scan(
+                path, words, require_all=True
+            )
+            if blocks is None:
+                return None
+            return blocked_proximity_topk(
+                self.spark, words, window, blocks.drop("term_bucket"), dsi,
+                k=top, url_lookup=self._blocked_url_dict(path),
+            )
 
-        from .wand import _local_result_df
-
-        def scatter(p):
-            part = self.search_proximity_blocked(p, terms, window=window, k=k)
-            return [(r["url"], int(r["n_matches"])) for r in part.collect()]
-
-        rows: list = []
-        with ThreadPoolExecutor(max_workers=min(8, len(index_paths))) as ex:
-            for part in ex.map(scatter, index_paths):
-                rows.extend(part)
-        rows.sort(key=lambda x: (-x[1], x[0]))
-        return _local_result_df(
-            self.spark, rows[:k], value_col="n_matches", value_type="long"
+        return self._federated(
+            index_path, run, k, value_col="n_matches", value_type="long"
         )
 
     def index_stats(self, index_path: str) -> dict:
@@ -1289,126 +1239,62 @@ class SearchEngine:
         )
 
     def search_boolean_blocked(
-        self, index_path: str, query: str, k: int = 100, ranked: bool = False
+        self, index_path: str | list, query: str, k: int = 100, ranked: bool = False
     ) -> DataFrame:
         """The boolean query language served off the compressed blocked
-        index — same semantics as search_boolean (one compiled filter
-        over per-doc presence flags, pure negation correct, wildcard
-        prefixes, ``ranked=True`` BM25-orders matches by the positive
-        exact terms) with the blocked layout's mechanics: wildcard
-        prefixes expand against the driver-side dictionary sidecar
-        (zero jobs), term buckets prune at the scan when every
-        expansion's bucket is known, and presence flags come from the
-        columnar scoring entries — no flat postings needed. Pinned
-        result-identical to the flat path by test."""
-        if not ranked:
-            return self._boolean_blocked(index_path, query, k)
+        index or a shard list (_federated) — same semantics as
+        search_boolean (one compiled filter over per-doc presence flags,
+        pure negation correct, wildcard prefixes, ``ranked=True``
+        BM25-orders matches by the positive exact terms) with the
+        blocked layout's mechanics: wildcard prefixes expand against the
+        driver-side dictionary sidecar (zero jobs), term buckets prune
+        at the scan when every expansion's bucket is known, and presence
+        flags come from the columnar scoring entries — no flat postings
+        needed. Pinned result-identical to the flat path by test."""
         from .functions.library import parse_boolean_query, positive_terms
 
-        ast = parse_boolean_query(query)
-        pos = [t for t in positive_terms(ast) if not t.endswith("*")]
-        blocks, _d, total, stats, term_stats = self._blocked_handles(index_path)
-        if term_stats is not None:
-            dfs = {t: term_stats[t][0] for t in pos if t in term_stats}
-        else:
-            dfs = {
-                r["term"]: int(r["df"])
-                for r in blocks.where(F.col("term").isin(pos))
-                .groupBy("term")
-                .agg(F.sum("n_docs").alias("df"))
-                .collect()
-            }
-        if not dfs:  # unranked fallback: nothing rankable (pure negation)
-            return self._boolean_blocked(index_path, query, k)
-        return self._boolean_blocked(
-            index_path, query, k,
-            dfs=dfs, n=total, avgdl=float(stats[0]) if stats else 1.0,
-        )
+        pos = []
+        if ranked:
+            pos = [
+                t for t in positive_terms(parse_boolean_query(query))
+                if not t.endswith("*")
+            ]
 
-    def search_boolean_sharded(
-        self, index_paths: list, query: str, k: int = 100,
-        ranked: bool = False,
-    ) -> DataFrame:
-        """Federated boolean retrieval: presence flags are shard-local,
-        so the match SET is the union of per-shard boolean matches.
-        Unranked merges by url (the single-index order); ranked scores
-        each shard's matches with GLOBAL document frequencies injected
-        (same stats recombination as search_bm25_sharded — per-shard
-        BM25 with shard-local dfs would mis-order the merged list) and
-        merges by (score desc, url). Row-identical to the single-index
-        boolean paths by test."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .functions.library import parse_boolean_query, positive_terms
-        from .wand import _local_result_df
-
-        if not ranked:
-            def scatter_plain(p):
-                part = self.search_boolean_blocked(p, query, k=k)
-                return [r["url"] for r in part.collect()]
-
-            urls: set = set()
-            with ThreadPoolExecutor(max_workers=min(8, len(index_paths))) as ex:
-                for part in ex.map(scatter_plain, index_paths):
-                    urls.update(part)
-            rows = [(u, 1) for u in sorted(urls)[:k]]
-            return _local_result_df(
-                self.spark, rows, value_col="_one", value_type="long"
-            ).select("url")
-
-        # ranked: recombine global dfs for the positive exact terms
-        ast = parse_boolean_query(query)
-        pos = [t for t in positive_terms(ast) if not t.endswith("*")]
-        if not pos:  # nothing rankable: same fallback as the flat path
-            return self.search_boolean_sharded(index_paths, query, k)
-        # mirror search_bm25_sharded's sidecar validation: a missing
-        # meta/stats sidecar raises the same clean ValueError (not a
-        # TypeError on None), and an all-empty deployment returns the
-        # empty relation instead of dividing by zero
-        df_global: dict = {}
-        metas = []
-        for p in index_paths:
-            _b, _d, total, stats, ts = self._blocked_handles(p)
-            if total is None or stats is None or ts is None:
-                raise ValueError(
-                    f"ranked sharded boolean needs meta + term_stats sidecars: {p}"
-                )
-            metas.append((total, stats))
-            for w in pos:
-                if w in ts:
-                    df_global[w] = df_global.get(w, 0) + ts[w][0]
-        n_global = sum(t for t, _s in metas)
-        if n_global == 0:
-            return self.spark.createDataFrame([], "url string, score double")
-        avgdl_global = sum(t * s[0] for t, s in metas) / n_global
-
-        def scatter_ranked(p):
-            part = self._boolean_blocked(
-                p, query, k,
-                dfs={
-                    t: df_global[t]
-                    for t in df_global
-                },
-                n=n_global, avgdl=avgdl_global,
+        def run(path, top, stats):
+            if pos and stats is None:  # one index: its own dictionary dfs
+                blocks, _d, total, agg, ts = self._blocked_handles(path)
+                if ts is not None:
+                    dfs = {t: ts[t][0] for t in pos if t in ts}
+                else:  # pre-dictionary layout: one metadata job
+                    dfs = {
+                        r["term"]: int(r["df"])
+                        for r in blocks.where(F.col("term").isin(pos))
+                        .groupBy("term")
+                        .agg(F.sum("n_docs").alias("df"))
+                        .collect()
+                    }
+                stats = (total, float(agg[0]) if agg else 1.0, dfs)
+            if not pos or not stats[2]:  # unranked, or nothing rankable
+                return self._boolean_blocked(path, query, top)
+            n, avgdl, dfs = stats
+            return self._boolean_blocked(
+                path, query, top, dfs=dfs, n=n, avgdl=avgdl
             )
-            return [(r["url"], float(r["score"])) for r in part.collect()]
 
-        rows_s: list = []
-        with ThreadPoolExecutor(max_workers=min(8, len(index_paths))) as ex:
-            for part in ex.map(scatter_ranked, index_paths):
-                rows_s.extend(part)
-        rows_s.sort(key=lambda x: (-x[1], x[0]))
-        return _local_result_df(self.spark, rows_s[:k])
+        return self._federated(
+            index_path, run, k, value_col="score" if pos else None,
+            stat_terms=pos or None,
+        )
 
     def _boolean_blocked(
         self, index_path, query, k, dfs=None, n=None, avgdl=None
     ):
         """Shared boolean-on-blocked implementation: presence flags +
         compiled filter; with (dfs, n, avgdl) supplied, BM25-ranks the
-        matches using exactly those collection stats (the single-index
-        path passes its own sidecar stats, the sharded scatter passes
-        the recombined GLOBAL ones); without them, returns the match
-        set ordered by url."""
+        matches using exactly those collection stats (a single index
+        passes its own sidecar stats, a federated deployment the
+        recombined GLOBAL ones); without them, returns the match set
+        ordered by url."""
         import math
 
         from .compression import scoring_entries

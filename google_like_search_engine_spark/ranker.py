@@ -29,7 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .kernels.hasher import kvs_hash
 from .kernels.porter import porter_stem
 
 
@@ -209,7 +208,3 @@ def score_bm25(
         .orderBy(F.desc("score"), F.asc("url"))
     )
 
-
-def hash_url(url: str) -> str:
-    """Query-side Hasher.hash (Ranker.java:100)."""
-    return kvs_hash(url)

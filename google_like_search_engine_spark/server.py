@@ -139,11 +139,13 @@ def make_server(
       GET /threshold?query=a+b&threshold=1.5  all docs scoring >= cutoff
       GET /stats                           metadata-only index report
 
-    With ``shard_paths`` (a list of save_blocked dirs), /search
-    scatter-gathers over the shards with global stats recombined
-    (engine.search_bm25_sharded) instead of the flat/served paths —
-    point the server at a sharded deployment with no flat index loaded
-    at all.
+    With ``shard_paths`` (a list of save_blocked dirs), /search and
+    the blocked routes (/phrase, /proximity, /threshold, /hybrid)
+    federate over the shards instead of the flat/served/blocked paths:
+    global stats recombined, later shards masking earlier copies of a
+    url (engine._federated). Point the server at a sharded deployment
+    with no flat index loaded at all; the routes that need one
+    (/autocomplete, /suggest, /boolean, scorer=tfidf) answer 400.
 
     With ``versioned_root`` (a save_versioned table), GET
     /admin/reload[?version=N] hot-swaps the serving index to the
@@ -337,6 +339,18 @@ def make_server(
 
         def _dispatch(self, u, q):
             engine, blocked_path, _snap = state["active"]
+            blocked = shard_paths or blocked_path
+            if shard_paths and (
+                u.path in ("/autocomplete", "/suggest", "/boolean")
+                or (u.path == "/search" and q.get("scorer") == "tfidf")
+            ):
+                # shard-configured servers carry no flat index
+                self._json(
+                    400,
+                    {"error": f"{u.path} needs a flat index; not available "
+                              "on a sharded server"},
+                )
+                return
             if u.path == "/admin/reload" and versioned_root:
                 import os as _os
 
@@ -411,17 +425,9 @@ def make_server(
                             {"error": "required/excluded need the bm25 scorer"},
                         )
                         return
-                    if shard_paths:
-                        # shard-configured servers carry no flat index
-                        self._json(
-                            400,
-                            {"error": "tfidf scorer not available on a "
-                                      "sharded server"},
-                        )
-                        return
                     res = engine.search(query, k=k)
                 elif shard_paths:
-                    res = engine.search_bm25_sharded(
+                    res = engine.search_bm25_blocked(
                         shard_paths, query, k=k,
                         required=required, excluded=excluded,
                     )
@@ -498,23 +504,19 @@ def make_server(
                 self._json(200, _metrics_snapshot())
             elif u.path == "/stats" and blocked_path:
                 self._json(200, engine.index_stats(blocked_path))
-            elif u.path == "/phrase" and (blocked_path or shard_paths):
+            elif u.path == "/phrase" and blocked:
                 query = q.get("query", "")
                 k = self._k(q)
                 if not query or k is None:
                     self._json(400, {"error": "need ?query= and integer ?k="})
                     return
-                res = (
-                    engine.search_phrase_sharded(shard_paths, query, k=k)
-                    if shard_paths
-                    else engine.search_phrase_blocked(blocked_path, query, k=k)
-                )
+                res = engine.search_phrase_blocked(blocked, query, k=k)
                 rows = [
                     {"url": r["url"], "n_occurrences": int(r["n_occurrences"])}
                     for r in res.collect()
                 ]
                 self._json(200, {"query": query, "results": rows})
-            elif u.path == "/threshold" and (blocked_path or shard_paths):
+            elif u.path == "/threshold" and blocked:
                 query = q.get("query", "")
                 try:
                     threshold = float(q.get("threshold", ""))
@@ -525,14 +527,8 @@ def make_server(
                         400, {"error": "need ?query= and float ?threshold="}
                     )
                     return
-                res = (
-                    engine.search_bm25_threshold_sharded(
-                        shard_paths, query, threshold=threshold
-                    )
-                    if shard_paths
-                    else engine.search_bm25_threshold_blocked(
-                        blocked_path, query, threshold=threshold
-                    )
+                res = engine.search_bm25_threshold_blocked(
+                    blocked, query, threshold=threshold
                 )
                 rows = [
                     {"url": r["url"], "score": float(r["score"])}
@@ -542,7 +538,7 @@ def make_server(
                     200,
                     {"query": query, "threshold": threshold, "results": rows},
                 )
-            elif u.path == "/proximity" and (blocked_path or shard_paths):
+            elif u.path == "/proximity" and blocked:
                 terms = [t for t in q.get("terms", "").split(",") if t]
                 k = self._k(q)
                 try:
@@ -555,14 +551,8 @@ def make_server(
                         {"error": "need ?terms=a,b integer ?k= and ?window>=0"},
                     )
                     return
-                res = (
-                    engine.search_proximity_sharded(
-                        shard_paths, terms, window=window, k=k
-                    )
-                    if shard_paths
-                    else engine.search_proximity_blocked(
-                        blocked_path, terms, window=window, k=k
-                    )
+                res = engine.search_proximity_blocked(
+                    blocked, terms, window=window, k=k
                 )
                 rows = [
                     {"url": r["url"], "n_matches": int(r["n_matches"])}
@@ -591,10 +581,7 @@ def make_server(
                     200,
                     {"n_queries": len(_percolator_asts), "matches": matches},
                 )
-            elif u.path == "/hybrid" and embeddings_path and (
-
-                blocked_path or shard_paths
-            ):
+            elif u.path == "/hybrid" and embeddings_path and blocked:
                 query = q.get("query", "")
                 qurl = q.get("qurl", "")
                 k = self._k(q)
@@ -616,7 +603,7 @@ def make_server(
                     self._json(404, {"error": f"no embedding for url {qurl!r}"})
                     return
                 res = engine.search_hybrid_rrf(
-                    shard_paths or blocked_path, query, emb, row[0][0],
+                    blocked, query, emb, row[0][0],
                     k=k, id_col="url",
                 )
                 rows = [

@@ -44,8 +44,8 @@ def main():
     ap.add_argument("--shards", type=int, default=0,
                     help="with --blocked: also build N hash-sharded "
                          "blocked indexes under <out>/shards/ (each an "
-                         "independent index; query with bm25-sharded, "
-                         "compact with merge_shards.py)")
+                         "independent index; query with query_index.py "
+                         "--shards, compact with merge_shards.py)")
     ap.add_argument("--pagerank", action="store_true")
     ap.add_argument("--resumable", action="store_true")
     ap.add_argument("--buckets", type=int, default=16)
@@ -102,7 +102,7 @@ def main():
             # hash-shard by url: each shard is a full independent
             # blocked index over its subset (own sidecars), the unit a
             # 100 TB deployment builds/replaces per job; global stats
-            # recombine at query time (search_bm25_sharded)
+            # recombine at query time (search_*_blocked over the shard list)
             from pyspark.sql import functions as F
 
             for i in range(args.shards):

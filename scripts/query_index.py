@@ -3,13 +3,14 @@
 
   python scripts/query_index.py --index /path/to/index \
       --query "apples figs" [--scorer tfidf|bm25|bm25-pruned|bm25-blocked|
-                             bm25-threshold|phrase|proximity|hybrid]
-      [-k 10] [--threshold 1.5] [--window 5]
+                             bm25-threshold|boolean|phrase|proximity|hybrid]
+      [-k 10] [--threshold 1.5] [--window 5] [--shards dir1,dir2]
 
-phrase / proximity / bm25-threshold run against the blocked layout
-(<index>/blocked); proximity takes the query words as anchor+partners.
-bm25-sharded scatter-gathers over --shards (comma-separated blocked
-dirs) with global df/N/avgdl recombined from the shards' sidecars.
+The blocked scorers (bm25-blocked, bm25-threshold, boolean, phrase,
+proximity, hybrid) run against the blocked layout (<index>/blocked), or
+federate over --shards (comma-separated blocked dirs; global df/N/avgdl
+recombined from the shards' sidecars, later shards masking earlier
+copies of a url). proximity takes the query words as anchor+partners.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BLOCKED_SCORERS = {"bm25-blocked", "bm25-threshold", "phrase", "proximity",
-                   "bm25-sharded", "boolean", "hybrid"}
+                   "boolean", "hybrid"}
 
 
 def main():
@@ -32,7 +33,7 @@ def main():
     ap.add_argument("--scorer", default="tfidf",
                     choices=["tfidf", "bm25", "bm25-pruned", "bm25-blocked",
                              "bm25-threshold", "phrase", "proximity",
-                             "bm25-sharded", "boolean", "hybrid"])
+                             "boolean", "hybrid"])
     ap.add_argument("-k", type=int, default=10)
     ap.add_argument("--threshold", type=float, default=1.0,
                     help="score cutoff for bm25-threshold (all docs >= it)")
@@ -52,8 +53,8 @@ def main():
                     help="hybrid scorer: url whose embedding is the "
                          "query vector (more-like-this)")
     ap.add_argument("--shards", default="",
-                    help="comma-separated blocked index dirs "
-                         "(bm25-sharded scorer; overrides --index)")
+                    help="comma-separated blocked index dirs the blocked "
+                         "scorers federate over (overrides --index)")
     args = ap.parse_args()
 
     from google_like_search_engine_spark.engine import SearchEngine
@@ -66,7 +67,10 @@ def main():
         # layout; loading the flat postings for them would add ~30 s of
         # needless cold I/O
         eng.load(args.index)
-    blocked = os.path.join(args.index, "blocked")
+    blocked = (
+        [p for p in args.shards.split(",") if p]
+        or os.path.join(args.index, "blocked")
+    )
     t0 = time.perf_counter()
     with eng.low_latency():  # interactive query: serving conf scope
         res, rows = _run_query(eng, args, blocked)
@@ -108,14 +112,10 @@ def _run_query(eng, args, blocked):
         row = emb.where(F.col("url") == args.qurl).select("embedding").take(1)
         if not row:
             raise SystemExit(f"no embedding for url {args.qurl!r}")
-        paths = [p for p in args.shards.split(",") if p]
         res = eng.search_hybrid_rrf(
-            paths or blocked, args.query, emb, row[0][0],
+            blocked, args.query, emb, row[0][0],
             k=args.k, id_col="url",
         ).select("url", "rrf", "bm25_rnk", "cos_rnk")
-    elif args.scorer == "bm25-sharded":
-        paths = [p for p in args.shards.split(",") if p] or [blocked]
-        res = eng.search_bm25_sharded(paths, args.query, k=args.k)
     elif args.scorer == "bm25-threshold":
         res = eng.search_bm25_threshold_blocked(
             blocked, args.query, threshold=args.threshold

@@ -33,9 +33,9 @@ def main():
     )
     ap.add_argument(
         "--shards", default="",
-        help="comma-separated blocked shard dirs: /search scatter-"
-        "gathers over them with global stats (no flat index needed; "
-        "--index may point anywhere when set)",
+        help="comma-separated blocked shard dirs: /search and the "
+        "blocked routes federate over them with global stats (no flat "
+        "index needed; --index may point anywhere when set)",
     )
     ap.add_argument(
         "--embeddings",

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Measure sharded-query fan-out: sequential per-shard loop vs the
-concurrent scatter in search_bm25_sharded, at 1/2/4 shards over the
-same corpus.
+concurrent scatter of search_bm25_blocked over a shard list, at 1/2/4
+shards over the same corpus.
 
   python scripts/shard_fanout_bench.py [n_pages] [n_queries]
 
@@ -74,10 +74,6 @@ def main():
 
     def run(paths, workers):
         # workers=1 forces the sequential baseline through the same code
-        from concurrent.futures import ThreadPoolExecutor as TPE
-        import google_like_search_engine_spark.engine as em
-
-        orig = em.ThreadPoolExecutor if hasattr(em, "ThreadPoolExecutor") else None
         walls = []
         for qi in range(n_queries):
             q = queries[qi % len(queries)]
@@ -88,12 +84,12 @@ def main():
                 for p in paths:
                     rows.extend(
                         (r["url"], float(r["score"]))
-                        for r in eng.search_bm25_sharded([p], q, k=10).collect()
+                        for r in eng.search_bm25_blocked(p, q, k=10).collect()
                     )
                 rows.sort(key=lambda x: (-x[1], x[0]))
                 _ = rows[:10]
             else:
-                _ = eng.search_bm25_sharded(paths, q, k=10).collect()
+                _ = eng.search_bm25_blocked(paths, q, k=10).collect()
             walls.append((time.perf_counter() - t0) * 1000)
         walls = walls[2:]  # drop warmup
         return round(statistics.median(walls), 1)

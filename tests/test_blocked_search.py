@@ -531,7 +531,7 @@ def test_sharded_search_equals_single_index(spark, tmp_path):
         ]
         sharded = [
             (r["url"], round(r["score"], 6))
-            for r in eng.search_bm25_sharded(
+            for r in eng.search_bm25_blocked(
                 [s0_path, s1_path], query, k=k
             ).collect()
         ]
@@ -543,22 +543,22 @@ def test_sharded_search_equals_single_index(spark, tmp_path):
               full_path, "spark shuffle", k=10,
               required=["join"], excluded=["onlyeven"]).collect()]
     fsh = [(r["url"], round(r["score"], 6))
-           for r in eng.search_bm25_sharded(
+           for r in eng.search_bm25_blocked(
                [s0_path, s1_path], "spark shuffle", k=10,
                required=["join"], excluded=["onlyeven"]).collect()]
     assert fsh == fs and fs  # nonempty
 
     # absent term everywhere -> empty
-    assert eng.search_bm25_sharded([s0_path, s1_path], "zzznope").collect() == []
+    assert eng.search_bm25_blocked([s0_path, s1_path], "zzznope").collect() == []
 
     # OVERLAPPING shards: a delta shard rewriting u00 masks the base
     # version even for queries only the stale text matches
     delta_path = str(tmp_path / "delta")
     build([("0", "u00", "freshterm content")], delta_path)
-    spark_hits = {r["url"] for r in eng.search_bm25_sharded(
+    spark_hits = {r["url"] for r in eng.search_bm25_blocked(
         [s0_path, s1_path, delta_path], "spark", k=50).collect()}
     assert "u00" not in spark_hits and spark_hits  # stale masked
-    fresh_hits = {r["url"] for r in eng.search_bm25_sharded(
+    fresh_hits = {r["url"] for r in eng.search_bm25_blocked(
         [s0_path, s1_path, delta_path], "freshterm", k=10).collect()}
     assert fresh_hits == {"u00"}
 
@@ -676,7 +676,7 @@ def test_sharded_phrase_and_threshold_equal_single(spark, tmp_path):
     ph_single = [(r["url"], r["n_occurrences"]) for r in
                  eng.search_phrase_blocked(full_p, "table scan", k=12).collect()]
     ph_shard = [(r["url"], r["n_occurrences"]) for r in
-                eng.search_phrase_sharded([s0_p, s1_p], "table scan", k=12).collect()]
+                eng.search_phrase_blocked([s0_p, s1_p], "table scan", k=12).collect()]
     assert ph_shard == ph_single and ph_single
 
     th_single = sorted(
@@ -684,7 +684,7 @@ def test_sharded_phrase_and_threshold_equal_single(spark, tmp_path):
         eng.search_bm25_threshold_blocked(full_p, "spark scan", 0.5).collect())
     th_shard = sorted(
         (r["url"], round(r["score"], 6)) for r in
-        eng.search_bm25_threshold_sharded([s0_p, s1_p], "spark scan", 0.5).collect())
+        eng.search_bm25_threshold_blocked([s0_p, s1_p], "spark scan", 0.5).collect())
     assert th_shard == th_single and th_single
 
 
@@ -753,13 +753,13 @@ def test_boolean_blocked_equals_flat(spark, tmp_path):
         single = [r["url"] for r in
                   eng.search_boolean_blocked(path, q, k=50).collect()]
         fed = [r["url"] for r in
-               eng.search_boolean_sharded([s0_p, s1_p], q, k=50).collect()]
+               eng.search_boolean_blocked([s0_p, s1_p], q, k=50).collect()]
         assert fed == single, q
     for q in ["alpha AND beta", "beta OR gamma"]:
         single = [(r["url"], round(r["score"], 6)) for r in
                   eng.search_boolean_blocked(path, q, k=50, ranked=True).collect()]
         fed = [(r["url"], round(r["score"], 6)) for r in
-               eng.search_boolean_sharded(
+               eng.search_boolean_blocked(
                    [s0_p, s1_p], q, k=50, ranked=True).collect()]
         assert fed == single, q
 
@@ -799,7 +799,9 @@ def test_sharded_mask_overfetch_keeps_live_docs(spark, tmp_path):
     """Overlapping base+delta: when a base shard's top-k slots are
     occupied by urls a later shard supersedes, the shard must
     over-fetch so live docs ranked below them still reach the driver
-    merge — pinned row-identical to the merged single index."""
+    merge — pinned row-identical to the merged single index. Every
+    query kind masks the same way: no stale base row for a url the
+    delta rewrote, no duplicate for a url both shards match."""
     from pyspark.sql import functions as F
 
     from google_like_search_engine_spark.engine import SearchEngine
@@ -828,13 +830,19 @@ def test_sharded_mask_overfetch_keeps_live_docs(spark, tmp_path):
     # are the live lower-ranked matches the old truncate-then-mask
     # federation lost
     base_rows = [
-        ("0", "u00", "hot hot hot hot"),
-        ("1", "u01", "hot hot hot hot"),
+        ("0", "u00", "hot hot hot hot table scan"),
+        ("1", "u01", "hot hot hot hot table scan"),
+        ("2", "u02", "hot filler table scan"),
     ] + [
-        (str(i), f"u{i:02d}", "hot filler filler filler") for i in range(2, 6)
+        (str(i), f"u{i:02d}", "hot filler filler filler") for i in range(3, 6)
     ]
-    # delta rewrites u00/u01 with text that does NOT match the query
-    delta_rows = [("0", "u00", "fresh other"), ("1", "u01", "fresh other")]
+    # delta rewrites u00/u01 with text that does NOT match "hot"; u00
+    # still matches "table scan" (a duplicate candidate), u01 no longer
+    # does (a stale candidate)
+    delta_rows = [
+        ("0", "u00", "fresh other table scan"),
+        ("1", "u01", "fresh other"),
+    ]
     base_path = str(tmp_path / "base")
     delta_path = str(tmp_path / "delta")
     full_path = str(tmp_path / "full")
@@ -842,6 +850,7 @@ def test_sharded_mask_overfetch_keeps_live_docs(spark, tmp_path):
     build(delta_rows, delta_path)
     # the merged live state: delta's versions of u00/u01 + base's rest
     eng = build(delta_rows + base_rows[2:], full_path)
+    fed = [base_path, delta_path]
 
     # url identity, not score identity: overlapping shards' global
     # stats count superseded copies until compaction (the documented
@@ -854,8 +863,82 @@ def test_sharded_mask_overfetch_keeps_live_docs(spark, tmp_path):
         ]
         sharded = [
             r["url"]
-            for r in eng.search_bm25_sharded(
-                [base_path, delta_path], "hot", k=k
-            ).collect()
+            for r in eng.search_bm25_blocked(fed, "hot", k=k).collect()
         ]
         assert sharded == single and len(single) == k, k
+
+    # shard-local kinds: exact rows
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    for one, many, urls in [
+        (eng.search_phrase_blocked(full_path, "table scan"),
+         eng.search_phrase_blocked(fed, "table scan"), ["u00", "u02"]),
+        (eng.search_proximity_blocked(full_path, ["table", "scan"]),
+         eng.search_proximity_blocked(fed, ["table", "scan"]), ["u00", "u02"]),
+        (eng.search_boolean_blocked(full_path, "table AND scan"),
+         eng.search_boolean_blocked(fed, "table AND scan"), ["u00", "u02"]),
+        # no positive term indexed anywhere: ranked falls back to url order
+        (eng.search_boolean_blocked(full_path, "zzznope OR NOT hot", ranked=True),
+         eng.search_boolean_blocked(fed, "zzznope OR NOT hot", ranked=True),
+         ["u00", "u01"]),
+    ]:
+        want = rows(one)
+        assert rows(many) == want and [r[0] for r in want] == urls, urls
+
+    # scored kinds: the merged index's url set, each url once
+    emb = spark.createDataFrame(
+        [("u05", [1.0, 0.0])], "url string, embedding array<float>"
+    )
+    for one, many in [
+        (eng.search_bm25_threshold_blocked(full_path, "table", 0.0),
+         eng.search_bm25_threshold_blocked(fed, "table", 0.0)),
+        (eng.search_boolean_blocked(full_path, "table AND scan", ranked=True),
+         eng.search_boolean_blocked(fed, "table AND scan", ranked=True)),
+        (eng.search_hybrid_rrf(full_path, "table", emb, [1.0, 0.0], id_col="url"),
+         eng.search_hybrid_rrf(fed, "table", emb, [1.0, 0.0], id_col="url")),
+    ]:
+        want = [r["url"] for r in one.collect()]
+        got = [r["url"] for r in many.collect()]
+        assert len(got) == len(set(got)) and set(got) == set(want), got
+        assert {"u00", "u02"} <= set(want) and "u01" not in want
+
+
+def test_sharded_jobs_keep_callers_job_group(spark, tmp_path):
+    """Each shard's job runs on a pool thread: it must still land in
+    the caller's job group (the request id a server sets), or per-
+    request job accounting and cancellation miss the whole fan-out."""
+    from pyspark.sql import functions as F
+
+    from google_like_search_engine_spark.engine import SearchEngine
+    from google_like_search_engine_spark.indexer import build_postings
+
+    paths = []
+    for i, text in enumerate(["spark table scan", "spark join scan"]):
+        e = SearchEngine(spark)
+        e.postings = build_postings(spark.createDataFrame(
+            [(str(i), f"u{i}", text)], "doc_id string, url string, text string"
+        ))
+        e.doc_stats = e.postings.groupBy("doc_id", "url").agg(
+            F.sum("tf").alias("n_term_entries")
+        )
+        paths.append(str(tmp_path / f"s{i}"))
+        e.save_blocked(paths[-1])
+    eng = SearchEngine(spark)
+    sc = spark.sparkContext
+    try:
+        with eng.low_latency():
+            for name, query in [
+                ("bm25", lambda: eng.search_bm25_blocked(paths, "spark scan")),
+                ("phrase", lambda: eng.search_phrase_blocked(paths, "spark")),
+            ]:
+                query().collect()  # warm: handles, url dicts, shard masks
+                sc.setJobGroup(f"probe_fed_{name}", "job group probe")
+                assert len(query().collect()) == 2
+                ids = sc.statusTracker().getJobIdsForGroup(f"probe_fed_{name}")
+                assert len(ids) >= len(paths), (name, len(ids))
+                if name == "bm25":  # warm blocked BM25: one job per shard
+                    assert len(ids) == len(paths), len(ids)
+    finally:
+        sc.setJobGroup("probe_done", "clear")
+        eng.unpersist()

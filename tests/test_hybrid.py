@@ -176,8 +176,9 @@ def hybrid_shards(spark, tmp_path_factory):
 
 def test_engine_fusion_sharded_matches_single(hybrid_setup, hybrid_shards):
     """Hybrid over a 2-shard lexical deployment == hybrid over the
-    single full index: search_bm25_sharded is row-identical to the
-    single-index run (pinned elsewhere), so the fusion must be too."""
+    single full index: search_bm25_blocked over the shard list is
+    row-identical to the single-index run (pinned elsewhere), so the
+    fusion must be too."""
     eng, blocked, emb = hybrid_setup
     paths = hybrid_shards
     qv, _ = _expected_fusion(eng, blocked, emb, k=10)

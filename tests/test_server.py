@@ -498,6 +498,11 @@ def test_sharded_search_route(engine, tmp_path_factory):
         ]
         got2 = [(r["url"], round(r["score"], 6)) for r in body2["results"]]
         assert code2 == 200 and got2 == want2 and got2
+        # routes that need a flat index answer 400, not an assert's 500
+        for route in ("/boolean?query=search", "/autocomplete?prefix=se",
+                      "/suggest?q=serch", "/search?query=search&scorer=tfidf"):
+            code3, body3 = _get_allow_error(f"{base}{route}")
+            assert code3 == 400 and "sharded server" in body3["error"], route
     finally:
         srv.shutdown()
 
